@@ -16,6 +16,16 @@ from pyspark.sql import functions as F
 # Tokenization
 
 
+def _let(value: Column, body) -> Column:
+    """Let-binding for column expressions: evaluate ``value`` once per row
+    and reference it as a lambda variable inside ``body``. (``transform``
+    evaluates its input array once; the lambda sees the bound value, so
+    Catalyst cannot inline-duplicate the expensive expression — there is
+    no common-subexpression elimination across higher-order-function
+    lambdas.)"""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def tokens(text: Column | str) -> Column:
     """Whitespace tokens."""
     return F.split(text, " ")
@@ -32,19 +42,23 @@ def bpe_ish_token_count(text: Column | str) -> Column:
 def word_shingles(text: Column | str, k: int = 3) -> Column:
     """Distinct word k-shingles ("a b c" style), built array-side:
     transform over a 0..n-k index sequence + slice + concat — no explode,
-    no shuffle; cost is linear per row regardless of cluster size."""
-    w = tokens(text)
-    # Guard: sequence(1, n) with n < 1 would generate a DESCENDING sequence
-    # in Spark, not an empty one.
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(w, i, k)),
+    no shuffle. The token array is let-bound, so each row's text is split
+    once and the cost is linear per row regardless of cluster size."""
+
+    def body(w: Column) -> Column:
+        # Guard: sequence(1, n) with n < 1 would generate a DESCENDING
+        # sequence in Spark, not an empty one.
+        shingles = F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.size(w) - (k - 1)),
+                lambda i: F.concat_ws(" ", F.slice(w, i, k)),
+            )
         )
-    )
-    return F.when(F.size(w) >= k, shingles).otherwise(
-        F.array().cast("array<string>")
-    )
+        return F.when(F.size(w) >= k, shingles).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return _let(tokens(text), body)
 
 
 # ---------------------------------------------------------------------------
@@ -127,13 +141,6 @@ def quality_score(text: Column | str) -> Column:
 
 # ---------------------------------------------------------------------------
 # Repetition signals (Gopher-style quality rules)
-
-
-def _let(value: Column, body) -> Column:
-    """Let-binding (see operators/dedup.py:_let — duplicated here to keep
-    functions/ free of operators/ imports): evaluate ``value`` once per
-    row; Catalyst cannot inline-duplicate through the lambda variable."""
-    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 def repetition_metrics(text: Column | str) -> dict[str, Column]:

@@ -21,10 +21,10 @@ extensions (BASELINE.json).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import _let, tokens
 from .sampling import hash_bucket
 
 
@@ -41,24 +41,28 @@ def chunk_documents(
     ``n_chunks = ceil(max(n_tokens - win, 0) / stride) + 1`` — every token
     is covered, the final window may be short, and a doc shorter than
     ``win`` yields exactly one chunk. Chunk construction is array-side
-    (sequence → slice → concat), exploded with position as ``chunk_id``.
+    (sequence → slice → concat over the let-bound token array, so each
+    text is split once), exploded with position as ``chunk_id``.
     """
     if stride <= 0 or win <= 0:
         raise ValueError("win and stride must be positive")
-    w = tokens(F.col(text_col))
-    n = F.size(w)
-    n_chunks = (
-        F.ceil(F.greatest(n - win, F.lit(0)) / F.lit(float(stride))) + 1
-    ).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(1), n_chunks),
-        lambda i: F.struct(
-            F.least(F.lit(win), n - (i - 1) * stride).alias("n_tokens"),
-            F.concat_ws(" ", F.slice(w, (i - 1) * stride + 1, win)).alias(
-                "chunk"
+
+    def body(w: Column) -> Column:
+        n = F.size(w)
+        n_chunks = (
+            F.ceil(F.greatest(n - win, F.lit(0)) / F.lit(float(stride))) + 1
+        ).cast("int")
+        return F.transform(
+            F.sequence(F.lit(1), n_chunks),
+            lambda i: F.struct(
+                F.least(F.lit(win), n - (i - 1) * stride).alias("n_tokens"),
+                F.concat_ws(" ", F.slice(w, (i - 1) * stride + 1, win)).alias(
+                    "chunk"
+                ),
             ),
-        ),
-    )
+        )
+
+    chunks = _let(tokens(F.col(text_col)), body)
     return docs.select(
         F.col(id_col), F.posexplode(chunks).alias("chunk_id", "c")
     ).select(

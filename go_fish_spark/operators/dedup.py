@@ -47,28 +47,28 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions import vectors
-from ..functions.text import word_shingles
+from ..functions.text import _let, word_shingles
 
 # Mersenne prime 2^31-1: modulus for the MinHash universal hash family.
 _P31 = (1 << 31) - 1
 
 
-def _let(value: Column, body) -> Column:
-    """Let-binding for column expressions: evaluate ``value`` once per row
-    and reference it as a lambda variable inside ``body``. (``transform``
-    evaluates its input array once; the lambda sees the bound value, so
-    Catalyst cannot inline-duplicate the expensive expression.)"""
-    return F.element_at(F.transform(F.array(value), body), 1)
-
-
 #: Frames persisted by the pair-generating operators (their self-joins
 #: consume the signatures twice). Spark only evicts caches under memory
 #: pressure, so long-lived sessions can call :func:`release_caches` between
-#: corpora to return executor storage eagerly.
+#: corpora to return executor storage eagerly. Frames uncached by other
+#: means (``spark.catalog.clearCache()``) are dropped from the list at the
+#: next :func:`_persist`, so it does not hold their plans alive.
 _CACHED_FRAMES: list[DataFrame] = []
 
 
+def _still_cached(df: DataFrame) -> bool:
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
 def _persist(df: DataFrame) -> DataFrame:
+    _CACHED_FRAMES[:] = [f for f in _CACHED_FRAMES if _still_cached(f)]
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _CACHED_FRAMES.append(df)
     return df
@@ -1516,26 +1516,32 @@ def passage_dedup(
     — deterministic), and each document is rebuilt from its kept spans
     in order. Output: (id_col, n_spans, n_kept, text_dedup).
 
-    100 TB shape: span construction is array-side per row (zero
-    shuffles); first-occurrence election is ONE shuffle on the 16-byte
+    100 TB shape: span construction is array-side per row over the
+    let-bound token array (each text split once; zero shuffles);
+    first-occurrence election is ONE shuffle on the 16-byte
     span digest (window rn=1 — hot boilerplate digests are the skew
     consideration: each group holds every copy of one span, same hazard
     class as exact dedup's digest groupBy); document reassembly is one
     groupBy on the doc id with an order-preserving sort_array, not a
     global sort."""
-    toks = F.split(F.col(text_col), " ")
-    n_spans = F.ceil(F.size(toks) / F.lit(span_tokens)).cast("int")
-    spans = F.transform(
-        F.sequence(F.lit(0), n_spans - 1),
-        lambda i: F.concat_ws(
-            " ", F.slice(toks, i * span_tokens + 1, span_tokens)
-        ),
-    )
+
+    def spans(toks: Column) -> Column:
+        n_spans = F.ceil(F.size(toks) / F.lit(span_tokens)).cast("int")
+        return F.when(
+            F.size(toks) > 0,
+            F.transform(
+                F.sequence(F.lit(0), n_spans - 1),
+                lambda i: F.concat_ws(
+                    " ", F.slice(toks, i * span_tokens + 1, span_tokens)
+                ),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
     exploded = df.select(
         F.col(id_col).alias("_id"),
-        F.posexplode(F.when(F.size(toks) > 0, spans).otherwise(
-            F.array().cast("array<string>")
-        )).alias("_pos", "_span"),
+        F.posexplode(_let(F.split(F.col(text_col), " "), spans)).alias(
+            "_pos", "_span"
+        ),
     )
     w = Window.partitionBy(F.md5("_span")).orderBy("_id", "_pos")
     kept = exploded.withColumn("_rn", F.row_number().over(w))

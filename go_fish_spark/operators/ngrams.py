@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import _let, tokens
 
 
 def ngram_stats(
@@ -29,21 +29,24 @@ def ngram_stats(
     ordered by term_freq desc with the n-gram string as tie-break.
 
     Physical shape: n-grams are built array-side per row (transform over
-    an index sequence — linear per row, no shuffle), exploded, then ONE
+    an index sequence on the let-bound token array — each text is split
+    once, so linear per row, no shuffle), exploded, then ONE
     shuffle on the n-gram key with map-side partial aggregation — hot
     n-grams combine before the exchange, so skew in natural language
     frequency (Zipf) hits the network as one partial row per partition,
     not one row per occurrence. The final top-k is a TakeOrdered over the
     aggregated (vocab-sized, not corpus-sized) frame.
     """
-    w = tokens(text_col)
-    grams = F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(w, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = _let(
+        tokens(text_col),
+        lambda w: F.when(
+            F.size(w) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.size(w) - (n - 1)),
+                lambda i: F.concat_ws(" ", F.slice(w, i, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>")),
+    )
     return (
         df.select(F.col(id_col).alias("_id"), F.explode(grams).alias("ngram"))
         .groupBy("ngram")

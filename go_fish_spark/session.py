@@ -69,6 +69,13 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # With the UI off, the status store still keeps up to 1000
+        # executions, jobs and stages (with their plans) on the driver
+        # heap; the package reads none of them, so a long-lived session
+        # keeps only the latest few.
+        .config("spark.sql.ui.retainedExecutions", "20")
+        .config("spark.ui.retainedJobs", "50")
+        .config("spark.ui.retainedStages", "50")
         # keep stderr clean: the driver's bench capture keeps only the
         # last ~2000 chars of combined output, and interleaved
         # "[Stage N:>  ]" progress-bar rewrites used to land mid-stream

@@ -76,14 +76,16 @@ def main() -> int:
         if qd is None:
             continue
         try:
-            j0 = len(tracker.getJobIdsForGroup(None) or [])
+            # job ids are sequential: the newest id counts jobs even though
+            # the session keeps only the latest few in its status store
+            j0 = max(tracker.getJobIdsForGroup(None) or [-1])
             sc.setJobDescription(f"profile:{name}")
             t0 = time.perf_counter()
             df = qd.fn(spark, args.sf)
             t1 = time.perf_counter()
             n = df.count()
             t2 = time.perf_counter()
-            j1 = len(tracker.getJobIdsForGroup(None) or [])
+            j1 = max(tracker.getJobIdsForGroup(None) or [-1])
             rec = {
                 "build_s": round(t1 - t0, 3),
                 "exec_s": round(t2 - t1, 3),
